@@ -37,7 +37,12 @@ def canonicalize(triples: DataFrame, url_col: str = "url") -> DataFrame:
     3.02 s vs 2.41 s without the exemplar (~2 % of pipeline wall) —
     kept, because a first-seen provenance URL per canonical triple is
     worth 2 %. If it ever matters, the fixed-width min(xxhash64(url))
-    variant restores HashAggregate at the cost of an opaque exemplar."""
+    variant restores HashAggregate at the cost of an opaque exemplar.
+
+    Input already hash-partitioned by ``subj`` (the pipeline's write
+    query, plans/pipeline.py:bucket_query) satisfies the grouping on
+    the full key, so the aggregate plans no exchange of its own; the
+    rows then shuffle without a map-side partial aggregate."""
     return triples.groupBy(*TRIPLE_KEY).agg(
         F.count(F.lit(1)).alias("support"),
         F.min(url_col).alias("first_url"),
@@ -86,7 +91,13 @@ def cluster_for_write(canonical: DataFrame, buckets: int = 32) -> DataFrame:
     """Layout for materialization: hash-repartition on subject (co-
     locates each entity's triples -> downstream entity-local joins are
     shuffle-free with the same bucketing), then sort within partitions
-    for parquet min-max pruning on (subj, pred)."""
+    for parquet min-max pruning on (subj, pred).
+
+    When ``canonical`` was computed from triples already
+    ``repartition(buckets, "subj")``-ed, Spark drops this repartition
+    as redundant, so canonicalize + write pay one exchange in total
+    (the pipeline's write query, guarded by
+    tests/pipeline/test_pipeline.py::test_write_query_plans_one_shuffle)."""
     return canonical.repartition(buckets, "subj").sortWithinPartitions(
         "subj", "pred", "obj_lex"
     )

@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources.extract import extract_blocks_from_html
 from ..terms import term_to_flat
 
 TRIPLES_SCHEMA = StructType(
@@ -160,7 +161,8 @@ def sniff_format(text: str) -> str:
     return "turtle"
 
 
-def parse_pages(pages: DataFrame, default_format: str = "turtle") -> DataFrame:
+def parse_pages(pages: DataFrame, default_format: str = "turtle",
+                from_html: bool = False) -> DataFrame:
     """pages(url, text[, format]) -> triples DataFrame.
 
     Runs the grammar kernels via mapInPandas (Arrow-batched). The page
@@ -172,31 +174,37 @@ def parse_pages(pages: DataFrame, default_format: str = "turtle") -> DataFrame:
     its value is null; pass ``"auto"`` to sniff per document
     (:func:`sniff_format`) — the crawl-realistic mode for pages with
     missing or wrong content types.
-    """
-    has_fmt = "format" in pages.columns
-    cols = ["url", "text"] + (["format"] if has_fmt else [])
-    src = pages.select(*cols)
 
-    def resolve(fmt, text):
-        f = fmt if fmt is not None else default_format
-        return sniff_format(text) if f == "auto" else f
+    ``from_html=True`` takes pages(url, html) instead and extracts each
+    page's embedded blocks (``extract_blocks_from_html``) inside the
+    same Python body that parses them: one JVM->Python crossing of the
+    html per page, rows equal to ``parse_pages(extract_pages(pages))``.
+    """
+    if from_html:
+        src = pages.select("url", "html")
+
+        def documents(pdf: pd.DataFrame):
+            for url, html in zip(pdf["url"], pdf["html"]):
+                for _idx, fmt, text in extract_blocks_from_html(html):
+                    yield url, fmt, text
+    else:
+        has_fmt = "format" in pages.columns
+        src = pages.select("url", "text", *(["format"] if has_fmt else []))
+
+        def documents(pdf: pd.DataFrame):
+            fmts = pdf["format"] if has_fmt else [None] * len(pdf)
+            for url, text, fmt in zip(pdf["url"], pdf["text"], fmts):
+                f = fmt if fmt is not None else default_format
+                yield url, sniff_format(text) if f == "auto" else f, text
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            fmts = pdf["format"] if has_fmt else None
-            for i, (url, text) in enumerate(zip(pdf["url"], pdf["text"])):
-                fmt = resolve(fmts.iloc[i] if fmts is not None else None,
-                              text)
+            for url, fmt, text in documents(pdf):
                 out.extend(doc_to_rows(url, fmt, text))
             yield pd.DataFrame(out, columns=_COLS)
 
     return src.mapInPandas(run, schema=TRIPLES_SCHEMA)
-
-
-def failed_docs(triples: DataFrame) -> DataFrame:
-    """Parse-error side-channel: (url, error) rows."""
-    return triples.where(triples.error.isNotNull()).select("url", "error")
 
 
 def good_triples(triples: DataFrame) -> DataFrame:

@@ -17,7 +17,8 @@ Resume protocol:
   input is bucketed into `n_buckets` by hash(url). Each bucket is an
   independent unit of work: parse -> ... -> append `part=<bucket>` to
   the output + write `_progress/<bucket>.json` LAST (write-ahead on
-  data, commit on watermark). A re-run skips buckets whose watermark
+  data, commit on watermark; lineage and watermark files appear whole,
+  via temp file + rename). A re-run skips buckets whose watermark
   exists; a killed run re-processes its in-flight bucket, overwriting
   the same partition directory (idempotent: the bucket's output is a
   pure function of its input).
@@ -29,40 +30,45 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canonical import canonicalize, cluster_for_write
 from ..operators.link import link_entities
 from ..operators.parse import good_triples, parse_pages
 from ..operators.skolemize import skolemize
-from ..sources.extract import extract_pages
+
+
+# Files per bucket partition: the write hash-partitions by subj into
+# this many tasks, each writing one sorted parquet file.
+WRITE_FILES = 4
 
 
 def parse_stage(pages: DataFrame, from_html: bool = True,
                 text_format: str = "turtle") -> DataFrame:
     """pages -> parsed rows (good triples AND errors-as-rows; lazy).
-    The single expensive stage: extract + grammar parse. Everything
+    The single expensive stage: extract + grammar parse, fused into
+    one Python operator per page when ``from_html``. Everything
     downstream (triple build, error accounting) derives from this one
     DataFrame so the parse runs once per bucket. ``text_format`` names
     the syntax of the ``text`` column when not extracting from HTML; a
     ``format`` column on the input overrides it per row."""
     if from_html:
-        blocks = extract_pages(pages)
-    elif "format" in pages.columns:
+        return parse_pages(pages, from_html=True)
+    if "format" in pages.columns:
         blocks = pages.select("url", "format", "text")
     else:
         blocks = pages.select("url", F.lit(text_format).alias("format"), "text")
     return parse_pages(blocks)
 
 
-def finish_triples(parsed: DataFrame,
+def linked_triples(parsed: DataFrame,
                    dictionary: DataFrame | None = None) -> DataFrame:
-    """parsed rows -> canonical triples (skolemize -> link -> dedupe)."""
+    """parsed rows -> skolemized, entity-linked triples (not deduped)."""
     triples = skolemize(good_triples(parsed))
     if dictionary is not None:
         triples = link_entities(triples, dictionary)
-    return canonicalize(triples)
+    return triples
 
 
 def build_triples(
@@ -72,7 +78,8 @@ def build_triples(
     text_format: str = "turtle",
 ) -> DataFrame:
     """The logical plan pages -> canonical triples (lazy; no actions)."""
-    return finish_triples(parse_stage(pages, from_html, text_format), dictionary)
+    return canonicalize(linked_triples(
+        parse_stage(pages, from_html, text_format), dictionary))
 
 
 def parse_errors(pages: DataFrame, from_html: bool = True,
@@ -81,8 +88,66 @@ def parse_errors(pages: DataFrame, from_html: bool = True,
     return parsed.where(F.col("error").isNotNull()).select("url", "error")
 
 
+def _counter(df: DataFrame, expr) -> tuple[DataFrame, Observation]:
+    obs = Observation()
+    return df.observe(obs, expr.alias("n")), obs
+
+
+def bucket_query(
+    pages: DataFrame,
+    dictionary: DataFrame | None = None,
+    from_html: bool = True,
+    text_format: str = "turtle",
+) -> tuple[DataFrame, dict[str, Observation]]:
+    """One bucket's write query: pages -> clustered canonical triples,
+    plus the lineage counters observed while the write runs.
+
+    Plan: one Python operator per page (parse_stage), then ONE shuffle:
+    the linked triples are hash-partitioned by subj into WRITE_FILES
+    partitions, which already satisfies canonicalize's grouping on the
+    full triple key and cluster_for_write's subj partitioning, so
+    neither adds an exchange; each partition is sorted and written as
+    one file. The counters ride on that same job (``df.observe``):
+      docs_in     - pages in the bucket (rows entering the parse);
+      docs_failed - error rows of the parse (one per failed block);
+      triples_out - canonical triples written.
+    Read them with ``Observation.get`` after the write. When no triple
+    is written, adaptive execution prunes the two observers below the
+    shuffle, and only ``triples_out`` (0) is reported."""
+    pages, docs_in = _counter(pages, F.count(F.lit(1)))
+    parsed, docs_failed = _counter(
+        parse_stage(pages, from_html=from_html, text_format=text_format),
+        F.count("error"))
+    linked = linked_triples(parsed, dictionary).repartition(WRITE_FILES, "subj")
+    clustered, triples_out = _counter(
+        cluster_for_write(canonicalize(linked), buckets=WRITE_FILES),
+        F.count(F.lit(1)))
+    return clustered, {"docs_in": docs_in, "docs_failed": docs_failed,
+                       "triples_out": triples_out}
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Write ``obj`` to ``path`` via a temp file and ``os.replace``, so
+    a crash never leaves a partial watermark or lineage record. The
+    temp name does not end in ``.json``, so readers skip leftovers."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 class PipelineRun:
-    """Checkpointed, lineage-recording pipeline execution."""
+    """Checkpointed, lineage-recording pipeline execution.
+
+    Lineage: ``_lineage/<bucket>.json`` per completed bucket, with
+      input_partition - the bucket number;
+      job_run_id      - the ``run_id`` of the run that processed it;
+      docs_in, docs_failed, triples_out - observed by the bucket's
+                        write job (see :func:`bucket_query`), so no
+                        extra Spark job computes them, except in a
+                        bucket that writes no triple;
+      wall_ms         - wall-clock time of the bucket, write included.
+    """
 
     def __init__(self, spark: SparkSession, out_dir: str, n_buckets: int = 8,
                  run_id: str = "run"):
@@ -125,11 +190,8 @@ class PipelineRun:
         bucketed = pages.withColumn(
             "__bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
         )
-        # Per bucket: ONE parse. The parsed rows (flat triple columns,
-        # far smaller than the raw HTML) are persisted and feed both the
-        # triple build and the error count; docs_in is a column-pruned
-        # count of the bucket's pages (url only, no parse) and
-        # triples_out a parquet-footer count of the written partition.
+        # Per bucket: one write query (bucket_query); the lineage counts
+        # come from its observations.
         # At real scale each bucket is an Iceberg partition-filtered
         # scan instead of the hash filter.
         for b in range(self.n_buckets):
@@ -137,32 +199,32 @@ class PipelineRun:
                 continue
             t0 = time.monotonic()
             part = bucketed.where(F.col("__bucket") == b).drop("__bucket")
-            docs_in = part.select("url").count()
-            parsed = parse_stage(part, from_html=from_html,
-                                 text_format=text_format).persist()
-            try:
-                canonical = finish_triples(parsed, dictionary)
-                out_path = os.path.join(self.data_dir, f"part={b}")
-                clustered = cluster_for_write(canonical, buckets=4)
-                clustered.write.mode("overwrite").parquet(out_path)
-                failed = parsed.where(F.col("error").isNotNull()).count()
-                triples_out = self.spark.read.parquet(out_path).count()
-            finally:
-                parsed.unpersist()
-            wall_ms = int((time.monotonic() - t0) * 1000)
+            clustered, counters = bucket_query(
+                part, dictionary, from_html=from_html, text_format=text_format)
+            clustered.write.mode("overwrite").parquet(
+                os.path.join(self.data_dir, f"part={b}"))
+            triples_out = counters["triples_out"].get["n"]
+            if triples_out:
+                docs_in = counters["docs_in"].get["n"]
+                failed = counters["docs_failed"].get["n"]
+            else:
+                # Nothing written: AQE swaps the plan below the empty
+                # shuffle for an empty relation, observers included, so
+                # this bucket (no good triple, cheap) is counted directly.
+                docs_in = part.count()
+                failed = parse_errors(part, from_html, text_format).count()
             lineage = {
                 "input_partition": b,
                 "job_run_id": self.run_id,
                 "docs_in": docs_in,
                 "docs_failed": failed,
                 "triples_out": triples_out,
-                "wall_ms": wall_ms,
+                "wall_ms": int((time.monotonic() - t0) * 1000),
             }
-            with open(os.path.join(self.lineage_dir, f"{b}.json"), "w") as f:
-                json.dump(lineage, f)
+            _write_json_atomic(os.path.join(self.lineage_dir, f"{b}.json"), lineage)
             # watermark LAST: commit point for this bucket
-            with open(os.path.join(self.progress_dir, f"{b}.json"), "w") as f:
-                json.dump({"bucket": b, "run_id": self.run_id}, f)
+            _write_json_atomic(os.path.join(self.progress_dir, f"{b}.json"),
+                               {"bucket": b, "run_id": self.run_id})
             stats["processed"].append(b)
             stats["triples_out"] += triples_out
             if fail_after_bucket is not None and b >= fail_after_bucket:

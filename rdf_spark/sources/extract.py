@@ -56,12 +56,17 @@ BLOCKS_SCHEMA = StructType(
 )
 
 
-# Attribute-level markup detection (cheap substring probes; the exact
-# semantics live in sources/html_rdf.py). A page with itemscope markup
-# yields one "microdata" block whose payload is the full html; same for
-# RDFa-lite attributes.
-_MICRODATA_PROBE = re.compile(r"\bitemscope\b", re.IGNORECASE)
-_RDFA_PROBE = re.compile(r"\b(?:typeof|vocab|property)\s*=", re.IGNORECASE)
+# Attribute-level markup detection (cheap probes; the exact semantics
+# live in sources/html_rdf.py). A page with itemscope markup yields one
+# "microdata" block whose payload is the full html; same for RDFa-lite
+# attributes. Each probe carries the keywords any of its matches must
+# contain: on ASCII text IGNORECASE matches only ASCII case variants,
+# so a keyword absent from html.lower() rules the regex out exactly.
+# Non-ASCII text always runs the regex, because Unicode case folding
+# lets e.g. "İtemscope" or "itemſcope" match.
+_MICRODATA_PROBE = (re.compile(r"\bitemscope\b", re.IGNORECASE), ("itemscope",))
+_RDFA_PROBE = (re.compile(r"\b(?:typeof|vocab|property)\s*=", re.IGNORECASE),
+               ("typeof", "vocab", "property"))
 
 
 def extract_blocks_from_html(html: bytes | str):
@@ -77,12 +82,13 @@ def extract_blocks_from_html(html: bytes | str):
         if fmt is not None:
             out.append((i, fmt, m.group(2)))
             i += 1
-    if _MICRODATA_PROBE.search(html):
-        out.append((i, "microdata", html))
-        i += 1
-    if _RDFA_PROBE.search(html):
-        out.append((i, "rdfa", html))
-        i += 1
+    low = html.lower() if html.isascii() else None
+    for fmt, (probe, keywords) in (("microdata", _MICRODATA_PROBE),
+                                   ("rdfa", _RDFA_PROBE)):
+        if (low is None or any(k in low for k in keywords)) \
+                and probe.search(html):
+            out.append((i, fmt, html))
+            i += 1
     return out
 
 

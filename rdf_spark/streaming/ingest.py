@@ -27,9 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.link import link_entities
-from ..operators.parse import parse_pages
 from ..operators.skolemize import skolemize
-from ..sources.extract import extract_pages
+from ..plans.pipeline import parse_stage
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -47,11 +46,7 @@ def stream_triples(pages: DataFrame, dictionary: DataFrame | None = None,
     link; parse errors kept as rows with ``error`` set)."""
     from pyspark.sql import functions as F
 
-    blocks = extract_pages(pages) if from_html else pages.select(
-        "url", F.lit(text_format).alias("format"), "text"
-    )
-    triples = parse_pages(blocks)
-    triples = skolemize(triples)
+    triples = skolemize(parse_stage(pages, from_html, text_format))
     if dictionary is not None:
         good = triples.where(F.col("error").isNull())
         bad = triples.where(F.col("error").isNotNull())

@@ -2,10 +2,13 @@
 (kill between partitions, re-run, byte-equal output), idempotence,
 lineage (SURVEY.md §5.2)."""
 
+import os
+
 import pytest
 
-from rdf_spark.plans.pipeline import PipelineRun, build_triples
-from rdf_spark.sources.pages import entity_dictionary, generate_pages
+from rdf_spark.plans.pipeline import PipelineRun, build_triples, parse_errors
+from rdf_spark.sources.pages import (PAGES_SCHEMA, entity_dictionary,
+                                     generate_pages)
 
 
 @pytest.fixture(scope="module")
@@ -121,3 +124,108 @@ def test_bucketed_table_finalize_star_join(spark, pages, tmp_path):
         assert _normalized(spark.table(table)) == _normalized(p.read_output())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+# Suite-free pages: template Turtle plus hand-built malformed blocks, so
+# the tests below need no vendored W3C corpus. Cached and materialized
+# here, so a job-count test sees only the pipeline's own jobs.
+_BAD_BLOCKS = ["@prefix broken <", "<http://e/s> <http://e/p> ."]
+
+
+@pytest.fixture(scope="module")
+def crawl_pages(spark):
+    gen = generate_pages(spark, 60, seed=42, partitions=4,
+                         suite_fraction=0, bad_fraction=0)
+    bad = spark.createDataFrame(
+        [(f"http://crawl.example/bad/{i}", None,
+          f'<script type="text/turtle">{t}</script>'.encode(), t, "en")
+         for i, t in enumerate(_BAD_BLOCKS)], PAGES_SCHEMA)
+    df = gen.unionByName(bad).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def _shuffle_exchanges(df) -> int:
+    """Shuffle Exchange nodes in df's physical plan, not counting those
+    below a broadcast (the linking dictionary's side)."""
+    def walk(node) -> int:
+        name = node.getClass().getSimpleName()
+        if name == "BroadcastExchangeExec":
+            return 0
+        kids = node.children()
+        return (name == "ShuffleExchangeExec") + sum(
+            walk(kids.apply(i)) for i in range(kids.size()))
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return walk(plan)
+
+
+def test_write_query_plans_one_shuffle(spark, crawl_pages):
+    """Plan regression: canonical dedupe and the subj-clustered write
+    share one hash exchange on subj (two on the old plan)."""
+    from rdf_spark.plans.pipeline import bucket_query
+
+    clustered, _ = bucket_query(crawl_pages, entity_dictionary(spark, 50))
+    assert _shuffle_exchanges(clustered) == 1
+
+
+# Measured for a 2-bucket run with a linking dictionary: per bucket only
+# the write query's own jobs (dictionary broadcast, the subj shuffle, the
+# write). The loop with count actions and two exchanges ran 28.
+MAX_JOBS_TWO_BUCKETS = 10
+
+
+def test_two_bucket_run_job_count_and_observed_lineage(spark, crawl_pages,
+                                                       tmp_path):
+    """Job-count regression: lineage is observed on the write job, so a
+    bucket runs no Spark job beyond its write query; and the observed
+    counts equal the real ones."""
+    d = entity_dictionary(spark, 50)
+    sc = spark.sparkContext
+    p = PipelineRun(spark, str(tmp_path / "jobs"), n_buckets=2, run_id="j")
+    sc.setJobGroup("pipeline-job-count", "2-bucket PipelineRun.run")
+    try:
+        stats = p.run(crawl_pages, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("pipeline-job-count")
+    assert len(jobs) <= MAX_JOBS_TWO_BUCKETS, sorted(jobs)
+
+    lineage = p.lineage()
+    assert [x["input_partition"] for x in lineage] == [0, 1]
+    assert sum(x["docs_in"] for x in lineage) == crawl_pages.count()
+    assert sum(x["docs_failed"] for x in lineage) == \
+        parse_errors(crawl_pages).count() == len(_BAD_BLOCKS)
+    assert sum(x["triples_out"] for x in lineage) == stats["triples_out"] \
+        == p.read_output().count() > 0
+
+
+def test_leftover_temp_file_is_not_a_completed_bucket(spark, crawl_pages,
+                                                      tmp_path):
+    """A crash while writing a watermark leaves only its temp file: the
+    bucket stays pending, and the next run commits it whole."""
+    p = PipelineRun(spark, str(tmp_path / "tmp"), n_buckets=1, run_id="t")
+    with open(os.path.join(p.progress_dir, "0.json.tmp"), "w") as f:
+        f.write('{"bucket": 0')
+    assert p.completed_buckets() == set()
+    assert p.run(crawl_pages)["processed"] == [0]
+    assert os.listdir(p.progress_dir) == ["0.json"]
+    assert os.listdir(p.lineage_dir) == ["0.json"]
+    assert p.completed_buckets() == {0}
+
+
+def test_lineage_of_bucket_without_triples(spark, tmp_path):
+    """A bucket whose pages all fail or carry no RDF writes no triple;
+    its lineage still counts its pages and error rows."""
+    pages = spark.createDataFrame(
+        [("http://crawl.example/bad", b'<script type="text/turtle">@@</script>'),
+         ("http://crawl.example/none", b"<p>no blocks</p>")],
+        "url string, html binary")
+    p = PipelineRun(spark, str(tmp_path / "empty"), n_buckets=1, run_id="e")
+    assert p.run(pages)["triples_out"] == 0
+    [lineage] = p.lineage()
+    assert (lineage["docs_in"], lineage["docs_failed"],
+            lineage["triples_out"]) == (2, 1, 0)

@@ -1,6 +1,9 @@
 """Spark-side parse/skolemize/link/dedupe tests, including the
 pipeline-vs-pure-Python oracle (P/R = 1.0 on the same documents)."""
 
+import os
+from collections import Counter
+
 import pandas as pd
 import pytest
 
@@ -11,8 +14,9 @@ from rdf_spark.operators.link import link_entities, salted_count
 from rdf_spark.operators.parse import good_triples, parse_pages
 from rdf_spark.operators.skolemize import skolemize
 from rdf_spark.operators import graphops
-from rdf_spark.sources.extract import extract_blocks_from_html
+from rdf_spark.sources.extract import extract_blocks_from_html, extract_pages
 from rdf_spark.sources.pages import generate_pages, entity_dictionary, generate_rows
+from rdf_spark.testsuite import SUITE_DIRS
 
 TTL_DOC = """@prefix s: <http://schema.org/> .
 <#me> a s:Person ; s:name "Ada"@en ; s:knows [ s:name "Bob" ] .
@@ -261,3 +265,60 @@ def test_jsonld_breadcrumb_list_auto(spark):
     assert items == [("http://site.example/", KIND_IRI),
                      ("http://site.example/recipes", KIND_IRI),
                      ("Chocolate Cake", KIND_LITERAL)]
+
+
+_HAND_PAGES = [
+    ("http://ex.org/microdata",
+     '<div itemscope itemtype="http://schema.org/Person">'
+     '<span itemprop="name">Ada</span></div>'),
+    ("http://ex.org/rdfa",
+     '<div vocab="http://schema.org/" typeof="Person">'
+     '<span property="name">Bob</span></div>'),
+    ("http://ex.org/jsonld",
+     '<script type="application/ld+json">{"@context": "https://schema.org",'
+     ' "@id": "http://ex.org/c", "@type": "Person", "name": "C"}</script>'),
+    ("http://ex.org/unknown-script",
+     '<script type="text/x-template">@prefix not rdf</script><p>x</p>'),
+    ("http://ex.org/no-blocks", "<html><body><p>plain page</p></body></html>"),
+    ("http://ex.org/bad-turtle",
+     '<script type="text/turtle">@prefix broken <</script>'),
+    ("http://ex.org/bad-jsonld",
+     '<script type="application/ld+json">{"@id": </script>'),
+    ("http://ex.org/mixed",
+     f'<script type="text/turtle">{TTL_DOC}</script>'
+     '<script type="application/n-triples"><http://e/s> <http://e/p> "v" .'
+     '</script><div itemscope><span itemprop="http://e/q">w</span></div>'
+     '<p vocab="http://schema.org/" property="name">n</p>'),
+]
+
+
+def _hand_pages(spark):
+    return spark.createDataFrame(
+        [(u, h.encode()) for u, h in _HAND_PAGES], "url string, html binary")
+
+
+def _template_pages(spark):
+    return generate_pages(spark, 40, seed=7, partitions=4,
+                          suite_fraction=0, bad_fraction=0)
+
+
+def _generated_pages(spark):
+    return generate_pages(spark, 40, seed=7, partitions=4, bad_fraction=0.3)
+
+
+_NEEDS_SUITES = pytest.mark.skipif(
+    not os.path.isdir(SUITE_DIRS["turtle"]),
+    reason="malformed pages come from the vendored W3C negative-syntax suites")
+
+
+@pytest.mark.parametrize("make_pages", [
+    _hand_pages, _template_pages,
+    pytest.param(_generated_pages, marks=_NEEDS_SUITES)])
+def test_fused_html_parse_equals_extract_then_parse(spark, make_pages):
+    """One Python operator per page (parse_pages(from_html=True)) gives
+    the same row multiset, error rows included, as extraction and
+    parsing run as two operators."""
+    pages = make_pages(spark)
+    fused = Counter(map(tuple, parse_pages(pages, from_html=True).collect()))
+    chained = Counter(map(tuple, parse_pages(extract_pages(pages)).collect()))
+    assert fused == chained and sum(fused.values()) > 0

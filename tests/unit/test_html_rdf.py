@@ -4,6 +4,8 @@ The reference has no HTML layer; these lock in the documented subset
 semantics and the determinism invariant (pure function of the bytes).
 """
 
+from hypothesis import given, settings, strategies as st
+
 from rdf_spark.sources.extract import extract_blocks_from_html
 from rdf_spark.sources.html_rdf import parse_microdata, parse_rdfa
 from rdf_spark.terms import RDF_TYPE
@@ -195,6 +197,40 @@ def test_extract_blocks_detects_attribute_markup():
 
 def test_extract_blocks_plain_html_is_empty():
     assert extract_blocks_from_html("<html><body><p>hello</p></body></html>") == []
+
+
+def _markup_fmts(html):
+    return [b[1] for b in extract_blocks_from_html(html)]
+
+
+def test_extract_probes_unicode_case_folds_and_word_boundaries():
+    """The ASCII substring prefilter in front of the attribute-markup
+    probes changes no verdict: non-ASCII case folds that IGNORECASE
+    matches still match, word-boundary misses still miss."""
+    for word in ("ıtemscope", "İtemscope", "itemſcope", "ITEMSCOPE"):
+        assert _markup_fmts(f"<div {word}></div>") == ["microdata"], word
+    for word in ("xitemscope", "itemscopes", "item_scope", "itemscope_"):
+        assert _markup_fmts(f"<div {word}></div>") == [], word
+    assert _markup_fmts('<p TypeOf = "t">') == ["rdfa"]
+    assert _markup_fmts('<p property="név">') == ["rdfa"]
+    assert _markup_fmts('<p xtypeof="t" data-vocabx="v" property_="p">') == []
+    assert _markup_fmts("<p>property and vocab, no attribute</p>") == []
+
+
+_PROBE_TOKENS = ["item", "ıtem", "İtem", "ITEM", "scope", "ſcope", "SCOPE",
+                 "typeof", "vocab", "property", "=", " ", "x", "_", "-", '"',
+                 "é"]
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.sampled_from(_PROBE_TOKENS), max_size=12).map("".join))
+def test_extract_probes_match_plain_regex(html):
+    from rdf_spark.sources.extract import _MICRODATA_PROBE, _RDFA_PROBE
+
+    expected = [fmt for fmt, (probe, _kw) in (("microdata", _MICRODATA_PROBE),
+                                              ("rdfa", _RDFA_PROBE))
+                if probe.search(html)]
+    assert _markup_fmts(html) == expected
 
 
 def test_literal_escape_canonicalization_roundtrip():
