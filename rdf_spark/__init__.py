@@ -18,4 +18,11 @@ Layout:
 - streaming/  Structured Streaming variants
 """
 
+from .submit import guard_zip_rereads
+
 __version__ = "0.1.0"
+
+# Every Python worker that unpickles an rdf_spark function imports this
+# package, so reused workers stop re-reading unchanged zip archives at
+# each task start (see rdf_spark/submit.py).
+guard_zip_rereads()

@@ -21,7 +21,9 @@ Resume protocol:
   via temp file + rename). A re-run skips buckets whose watermark
   exists; a killed run re-processes its in-flight bucket, overwriting
   the same partition directory (idempotent: the bucket's output is a
-  pure function of its input).
+  pure function of its input). A watermark records `n_buckets`, and a
+  run over watermarks of another bucket count raises instead of
+  mixing the two partitionings.
 """
 
 from __future__ import annotations
@@ -169,6 +171,21 @@ class PipelineRun:
             int(f[:-5]) for f in os.listdir(self.progress_dir) if f.endswith(".json")
         }
 
+    def _check_bucket_count(self) -> None:
+        """Refuse to resume over watermarks written with another
+        ``n_buckets``: hash buckets of two counts hold different pages,
+        so skipping or overwriting by bucket number would mix them.
+        Watermarks without the field predate it and are trusted."""
+        for b in sorted(self.completed_buckets()):
+            with open(os.path.join(self.progress_dir, f"{b}.json")) as fh:
+                n = json.load(fh).get("n_buckets", self.n_buckets)
+            if n != self.n_buckets:
+                raise ValueError(
+                    f"{self.out_dir} holds watermarks of a run with "
+                    f"n_buckets={n}, but this run has "
+                    f"n_buckets={self.n_buckets}; resume with n_buckets={n} "
+                    "or write to a fresh directory")
+
     def run(self, pages: DataFrame, dictionary: DataFrame | None = None,
             from_html: bool = True, fail_after_bucket: int | None = None,
             text_format: str = "turtle",
@@ -185,6 +202,7 @@ class PipelineRun:
         extra shuffle by subj at the end of the run; skipped (like
         the data buckets) when the run resumed with nothing to do
         AND the table already exists."""
+        self._check_bucket_count()
         done = self.completed_buckets()
         stats = {"processed": [], "skipped": sorted(done), "triples_out": 0}
         bucketed = pages.withColumn(
@@ -224,7 +242,8 @@ class PipelineRun:
             _write_json_atomic(os.path.join(self.lineage_dir, f"{b}.json"), lineage)
             # watermark LAST: commit point for this bucket
             _write_json_atomic(os.path.join(self.progress_dir, f"{b}.json"),
-                               {"bucket": b, "run_id": self.run_id})
+                               {"bucket": b, "run_id": self.run_id,
+                                "n_buckets": self.n_buckets})
             stats["processed"].append(b)
             stats["triples_out"] += triples_out
             if fail_after_bucket is not None and b >= fail_after_bucket:

@@ -44,6 +44,34 @@ _SCRIPT_RE = re.compile(
     r"<script\s[^>]*type\s*=\s*[\"']([^\"']+)[\"'][^>]*>(.*?)</script>",
     re.IGNORECASE | re.DOTALL,
 )
+_SCRIPT_OPEN_RE = re.compile(r"<script\s", re.IGNORECASE)
+_SCRIPT_CLOSE_RE = re.compile(r"</script>", re.IGNORECASE)
+
+
+def _script_matches(html: str):
+    """The matches of ``_SCRIPT_RE.finditer(html)``, without its
+    re-scan of the rest of the page from every unclosed or
+    attribute-only ``<script`` tag (quadratic on hostile pages). Every
+    match ends at a ``</script>``, so the scan stops at the last one. A
+    start that fails to match rules out every later start before the
+    same ``>``: their ``[^>]*`` reaches a subset of the ``type=``
+    positions the failed start tried, and what follows ``type=`` does
+    not depend on the start."""
+    last = None
+    for last in _SCRIPT_CLOSE_RE.finditer(html):
+        pass
+    if last is None:
+        return
+    end, pos = last.end(), 0
+    while (start := _SCRIPT_OPEN_RE.search(html, pos, end)) is not None:
+        m = _SCRIPT_RE.match(html, start.start(), end)
+        if m is not None:
+            yield m
+            pos = m.end()
+        else:
+            pos = html.find(">", start.end(), end)
+            if pos < 0:
+                return
 
 BLOCKS_SCHEMA = StructType(
     [
@@ -77,7 +105,7 @@ def extract_blocks_from_html(html: bytes | str):
         html = bytes(html).decode("utf-8", errors="replace")
     out = []
     i = 0
-    for m in _SCRIPT_RE.finditer(html):
+    for m in _script_matches(html):
         fmt = MEDIA_TYPE_FORMATS.get(m.group(1).strip().lower())
         if fmt is not None:
             out.append((i, fmt, m.group(2)))

@@ -229,3 +229,20 @@ def test_lineage_of_bucket_without_triples(spark, tmp_path):
     [lineage] = p.lineage()
     assert (lineage["docs_in"], lineage["docs_failed"],
             lineage["triples_out"]) == (2, 1, 0)
+
+
+def test_resume_with_another_bucket_count_is_refused(spark, crawl_pages,
+                                                     tmp_path):
+    """Watermarks of a 4-bucket run are not resumed with 2 buckets,
+    whose bucket numbers name other pages; the same count resumes."""
+    out = str(tmp_path / "nb")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        PipelineRun(spark, out, n_buckets=4, run_id="a").run(
+            crawl_pages, fail_after_bucket=0)
+    two = PipelineRun(spark, out, n_buckets=2, run_id="b")
+    with pytest.raises(ValueError, match="n_buckets=4, .* n_buckets=2"):
+        two.run(crawl_pages)
+    assert two.completed_buckets() == {0}
+    assert os.listdir(two.data_dir) == ["part=0"]
+    four = PipelineRun(spark, out, n_buckets=4, run_id="c")
+    assert four.run(crawl_pages)["processed"] == [1, 2, 3]

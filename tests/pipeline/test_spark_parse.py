@@ -60,6 +60,22 @@ def test_parse_errors_recorded_not_raised(spark, pages_df):
     assert "RDFSyntaxError" in errs[0].error
 
 
+def test_deep_nesting_is_one_error_row(spark):
+    """A collection nested far past the kernel's recursion limit
+    (operators/parse.py) becomes one RecursionError row, not a task
+    failure; the page's other document still parses."""
+    deep = "<http://e/s> <http://e/p> " + "(" * 2000 + ")" * 2000 + " ."
+    docs = spark.createDataFrame(
+        [("http://ex.org/deep", deep, "turtle"),
+         ("http://ex.org/ok", "<http://e/s> <http://e/p> (1) .", "turtle")],
+        "url string, text string, format string")
+    rows = parse_pages(docs).collect()
+    deep_rows = [r for r in rows if r.url == "http://ex.org/deep"]
+    assert len(deep_rows) == 1
+    assert deep_rows[0].error.startswith("RecursionError: ")
+    assert all(r.error is None for r in rows if r.url == "http://ex.org/ok")
+
+
 def test_skolemize_deterministic_and_global(spark, pages_df):
     t = skolemize(good_triples(parse_pages(pages_df)))
     rows1 = sorted(map(tuple, t.collect()))

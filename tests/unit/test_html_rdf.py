@@ -233,6 +233,51 @@ def test_extract_probes_match_plain_regex(html):
     assert _markup_fmts(html) == expected
 
 
+_SCRIPT_TOKENS = ["<script", "<SCRIPT", "<ſcrıpt", " ", "\n", "type", "TYPE",
+                  "=", '"', "'", ">", "</script>", "</SCRİPT>", "</ſcript>",
+                  "text/turtle", "application/n-triples", "x", "<", "/"]
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(st.sampled_from(_SCRIPT_TOKENS), max_size=30).map("".join))
+def test_script_scan_matches_plain_regex(html):
+    """The bounded <script> scan finds exactly the matches, spans and
+    groups of plain ``_SCRIPT_RE.finditer``, so blocks are unchanged."""
+    from rdf_spark.sources.extract import (MEDIA_TYPE_FORMATS, _SCRIPT_RE,
+                                           _script_matches)
+
+    plain = list(_SCRIPT_RE.finditer(html))
+    assert [(m.span(), m.groups()) for m in _script_matches(html)] == \
+        [(m.span(), m.groups()) for m in plain]
+    blocks = [(fmt, m.group(2)) for m in plain
+              if (fmt := MEDIA_TYPE_FORMATS.get(m.group(1).strip().lower()))]
+    assert [(f, t) for _i, f, t in extract_blocks_from_html(html)
+            if f not in ("microdata", "rdfa")] == blocks
+
+
+def _doubling_ratio(page, tail):
+    """Best time of the page doubled over best time of the page, from
+    interleaved samples, so a busy spell slows both sides alike."""
+    import functools
+    import timeit
+
+    small, large = (timeit.Timer(functools.partial(extract_blocks_from_html, p))
+                    for p in (page + tail, page * 2 + tail))
+    n = max(1, small.autorange()[0] // 2)
+    samples = [(small.timeit(n), large.timeit(n)) for _ in range(5)]
+    return min(t for _s, t in samples) / min(s for s, _t in samples)
+
+
+def test_script_scan_is_linear_on_hostile_pages():
+    """Doubling a page of unclosed ``<script type=...>`` tags, or of
+    bare ``<script`` tags before one close, at most ~2.5x its time
+    (a rescan from every open tag is ~4x per doubling)."""
+    unclosed = '<script type="text/turtle">' + "x" * 30
+    for unit, tail, kb in ((unclosed, "", 56), ("<script ", "</script>", 28)):
+        ratio = _doubling_ratio(unit * (kb * 1024 // len(unit)), tail)
+        assert ratio <= 2.5, (unit, ratio)
+
+
 def test_literal_escape_canonicalization_roundtrip():
     """Extracted literals with quotes/backslashes/newlines must carry
     the NT-escaped lexical form the grammar evaluators emit, so the
